@@ -4,7 +4,7 @@
 #
 # Targets:
 #   make check        pytest + oracle type audit + full strict oracle gate (sf0.01)
-#   make test         pytest only
+#   make test         pytest only (tests/, then the SparkSession-free perfbench/tests)
 #   make oracle       full strict Spark-vs-DuckDB oracle run at sf0.01
 #   make oracle-types fast DuckDB-only oracle output-type audit (no Spark)
 #   make bench        headline benchmark (one JSON line, sf0.1 by default)
@@ -18,6 +18,7 @@ check: test oracle-types oracle
 
 test:
 	$(PY) -m pytest tests/ -x -q
+	$(PY) -m pytest perfbench/tests -q
 
 oracle-types:
 	$(PY) tools/check_oracle.py --types-only $(SF_DIR)

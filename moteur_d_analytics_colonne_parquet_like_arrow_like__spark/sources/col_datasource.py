@@ -1,12 +1,12 @@
 """`.col` as a first-class Spark data source: ``spark.read.format("col")``.
 
-Built on Spark 4's Python DataSource API (SPARK-44076). Where
-``colfile.read_col`` decodes the whole file on the driver (fine for the
-single-node interchange contract it documents), this source hands Spark
-ONE InputPartition PER ROW GROUP: each executor seeks straight to its row
-group's column chunks and decodes only those — the reference's row-group
+Built on Spark 4's Python DataSource API (SPARK-44076). The source hands
+Spark ONE InputPartition PER ROW GROUP: each executor runs
+``colfile.read_col_rows`` on its row group, which seeks straight to the
+projected column chunks and decodes only those — the reference's row-group
 parallelism (cae/src/execution.cpp scan loop), but scheduled by Spark, so
-a 10k-row-group file fans out across the cluster. Requirements:
+a 10k-row-group file fans out across the cluster. ``colfile.read_col`` and
+the stream reader use the same loop. Requirements:
 
 - the path must be visible to executors (local FS here, shared storage on
   a real cluster — same contract as every file source),
@@ -14,13 +14,15 @@ a 10k-row-group file fans out across the cluster. Requirements:
   time (Catalyst still prunes its own projection above),
 - optional ``predicate`` option ("col op int", op ∈ eq/ne/lt/le/gt/ge)
   applies the reference's zone-map skipping per row group BEFORE any
-  decode, and the exact residual filter is applied to surviving rows.
+  decode, and the exact residual filter is applied to surviving rows; an
+  unknown op or name fails when the read is planned.
 
 The source is complete across all four surfaces:
 
 - batch read of a single ``.col`` file OR a directory of them
   (file × row-group input partitions),
-- streaming read of a growing directory (``ColStreamReader``),
+- streaming read of a growing directory (``ColStreamReader``, same
+  options),
 - streaming write (``ColStreamWriter``: executor-parallel task files,
   driver rename-as-commit),
 - plus the driver-side batch writer in ``colfile.write_col``.
@@ -46,93 +48,53 @@ from pyspark.sql.datasource import (
 )
 
 
-def _parse_predicate(spec: str | None):
-    if not spec:
-        return None
-    col, op, lit = spec.split()
-    return (col, op, int(lit))
+def _read_options(options: dict) -> tuple[str, list[str] | None, tuple | None]:
+    """(path, columns, predicate) of a ``format("col")`` read."""
+    from .colfile import parse_predicate
+
+    path = options.get("path")
+    if not path:
+        raise ValueError("format('col') needs .load(<path>)")
+    cols = options.get("columns")
+    columns = [c.strip() for c in cols.split(",")] if cols else None
+    return path, columns, parse_predicate(options.get("predicate"))
+
+
+def _col_files(path: str) -> list[str]:
+    """The ``*.col`` files of a directory in sorted order, or the one file."""
+    import os
+
+    if not os.path.isdir(path):
+        return [path]
+    return [os.path.join(path, f) for f in sorted(os.listdir(path)) if f.endswith(".col")]
 
 
 class _RowGroupPartition(InputPartition):
-    def __init__(self, index: int, file: str | None = None):
+    def __init__(self, index: int, file: str):
         self.index = index
         self.file = file
 
 
 class ColDataSourceReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("format('col') needs .load(<path>)")
-        cols = options.get("columns")
-        self.columns = [c.strip() for c in cols.split(",")] if cols else None
-        self.predicate = _parse_predicate(options.get("predicate"))
-
-    def _paths(self) -> list[str]:
-        import os
-
-        if os.path.isdir(self.path):
-            return [
-                os.path.join(self.path, f)
-                for f in sorted(os.listdir(self.path))
-                if f.endswith(".col")
-            ]
-        return [self.path]
+        self.path, self.columns, self.predicate = _read_options(options)
 
     def partitions(self):
-        from .colfile import _skippable_row_groups, read_col_metadata
+        from .colfile import _skippable_row_groups, projection, read_col_metadata
 
         parts = []
-        for fpath in self._paths():
+        for fpath in _col_files(self.path):
             schema, row_groups, _ = read_col_metadata(fpath)
+            projection(schema, self.columns, self.predicate)
             skips = _skippable_row_groups(row_groups, schema, self.predicate)
-            parts += [
-                _RowGroupPartition(i, fpath)
-                for i, skip in enumerate(skips)
-                if not skip
-            ]
+            parts += [_RowGroupPartition(i, fpath) for i, skip in enumerate(skips) if not skip]
         return parts
 
     def read(self, partition: _RowGroupPartition):
-        # Runs on the executor: open the file, seek to THIS row group's
-        # chunks, decode only the projected columns.
-        from .colfile import _decode_chunk, read_col_metadata
+        # Runs on the executor: decode only this row group's projected chunks.
+        from .colfile import read_col_rows
 
-        fpath = partition.file or self.path
-        schema, row_groups, _ = read_col_metadata(fpath)
-        rg = row_groups[partition.index]
-        proj = self.columns or schema.names
-        if self.predicate is not None and self.predicate[0] not in proj:
-            proj = list(proj) + [self.predicate[0]]
-        idxs = [schema.index_of(c) for c in proj]
-        data = []
-        with open(fpath, "rb") as f:
-            for ci in idxs:
-                ch = rg.chunks[ci]
-                f.seek(ch.file_offset)
-                raw = f.read(ch.total_size)
-                data.append(_decode_chunk(raw, schema.columns[ci], ch))
-        rows = zip(*data)
-        if self.predicate is not None:
-            col, op, value = self.predicate
-            pi = proj.index(col)
-            import operator as _op
-
-            cmp = {
-                "eq": _op.eq,
-                "ne": _op.ne,
-                "lt": _op.lt,
-                "le": _op.le,
-                "gt": _op.gt,
-                "ge": _op.ge,
-            }[op]
-            keep_pred = len(self.columns or schema.names)
-            rows = (
-                r[:keep_pred] if pi >= keep_pred else r
-                for r in rows
-                if cmp(r[pi], value)
-            )
-        yield from rows
+        yield from read_col_rows(partition.file, self.columns, self.predicate, partition.index)
 
 
 class ColDataSource(DataSource):
@@ -143,28 +105,19 @@ class ColDataSource(DataSource):
     def schema(self):
         from pyspark.sql import types as T
 
-        from .colfile import read_col_metadata
+        from .colfile import projection, read_col_metadata
 
-        import os
-
-        cols = self.options.get("columns")
-        proj = [c.strip() for c in cols.split(",")] if cols else None
-        path = self.options["path"]
-        if os.path.isdir(path):  # streaming: schema from the first file
-            listing = sorted(f for f in os.listdir(path) if f.endswith(".col"))
-            if not listing:
-                raise FileNotFoundError(
-                    f"no .col files yet in {path}; schema cannot be inferred "
-                    "— write one file first or pass an explicit schema"
-                )
-            path = os.path.join(path, listing[0])
-        schema, _, _ = read_col_metadata(path)
-        names = proj or schema.names
+        path, columns, predicate = _read_options(self.options)
+        files = _col_files(path)  # a directory's schema is its first file's
+        if not files:
+            raise FileNotFoundError(
+                f"no .col files yet in {path}; schema cannot be inferred "
+                "— write one file first or pass an explicit schema"
+            )
+        schema, _, _ = read_col_metadata(files[0])
+        out, idxs = projection(schema, columns, predicate)
         return T.StructType(
-            [
-                schema.columns[schema.index_of(c)].to_spark_field(nullable=False)
-                for c in names
-            ]
+            [schema.columns[ci].to_spark_field(nullable=False) for ci in idxs[: len(out)]]
         )
 
     def reader(self, schema) -> ColDataSourceReader:
@@ -187,56 +140,26 @@ class ColStreamReader(SimpleDataSourceStreamReader):
     listing, which is what makes recovery exactly-once."""
 
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("stream format('col') needs .load(<dir>)")
-
-    def _files(self):
-        import os
-
-        return sorted(
-            f for f in os.listdir(self.path) if f.endswith(".col")
-        )
+        self.path, self.columns, self.predicate = _read_options(options)
 
     def initialOffset(self) -> dict:
         return {"files_consumed": 0}
 
-    def _read_files(self, names):
-        import os
-
-        from .colfile import _decode_chunk, read_col_metadata
-
-        for name in names:
-            fpath = os.path.join(self.path, name)
-            schema, row_groups, _ = read_col_metadata(fpath)
-            with open(fpath, "rb") as f:
-                for rg in row_groups:
-                    cols = []
-                    for ci in range(len(schema.columns)):
-                        ch = rg.chunks[ci]
-                        f.seek(ch.file_offset)
-                        raw = f.read(ch.total_size)
-                        cols.append(
-                            _decode_chunk(raw, schema.columns[ci], ch)
-                        )
-                    yield from zip(*cols)
-
-    def read(self, start: dict):
+    def _read_files(self, files: list[str]) -> list[tuple]:
         # the simple stream API prefetches on the driver and requires a
         # COPYABLE iterator (a generator cannot be pickled into the
         # prefetch cache) — materialize the batch
-        files = self._files()
-        done = start["files_consumed"]
-        new = files[done:]
-        return list(self._read_files(new)), {"files_consumed": len(files)}
+        from .colfile import read_col_rows
+
+        return [r for f in files for r in read_col_rows(f, self.columns, self.predicate)]
+
+    def read(self, start: dict):
+        files = _col_files(self.path)
+        return self._read_files(files[start["files_consumed"] :]), {"files_consumed": len(files)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        files = self._files()
-        return list(
-            self._read_files(
-                files[start["files_consumed"] : end["files_consumed"]]
-            )
-        )
+        files = _col_files(self.path)
+        return self._read_files(files[start["files_consumed"] : end["files_consumed"]])
 
     def commit(self, end: dict) -> None:
         pass

@@ -11,8 +11,11 @@ indices reuse the RLE int32 codec (``cae/src/encoding.cpp:397-399``).
 
 This is an ingest/egress compatibility path, not the scale path: ``.col``
 files are single-node artifacts (uint32 row cap — ``cae/include/format.h:89``).
-``read_col`` parses driver-side and parallelizes into a DataFrame; for
-100 TB work, convert to parquet once (``col_to_parquet``) and run there.
+There is one scan loop, ``read_col_rows`` (zone-map row-group skipping,
+projected chunk decode, exact residual filter); ``spark.read.format("col")``
+runs it per row group in the Python workers, and ``read_col`` is that
+source after a driver-side check of the footer and names. For 100 TB work,
+convert to parquet once (``col_to_parquet``) and run there.
 
 Robustness contract mirrors the reference's corruption tests
 (``cae/tests/test_corruption.cpp``): bad magic / truncated footer /
@@ -21,11 +24,12 @@ out-of-range offsets / truncated varints raise ``ColFormatError``.
 
 from __future__ import annotations
 
+import operator
 import os
 import struct
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import ColumnSchema, ColumnType, EncodingType, Schema
 
@@ -614,59 +618,103 @@ def _skippable_row_groups(
     return out
 
 
+#: The exact residual compare behind every .col predicate (the zone map
+#: above only decides which row groups may hold a match).
+_COMPARE = {op: getattr(operator, op) for op in ("eq", "ne", "lt", "le", "gt", "ge")}
+
+
+def parse_predicate(spec: str | None) -> tuple[str, str, int] | None:
+    """``"col op int"`` -> ``(col, op, int)`` (checked by ``projection``)."""
+    if not spec:
+        return None
+    col, op, lit = spec.split()
+    return (col, op, int(lit))
+
+
+def projection(
+    schema: Schema,
+    columns: list[str] | None,
+    predicate: tuple[str, str, int] | None,
+) -> tuple[list[str], list[int]]:
+    """(output names, decoded column indices): the requested columns (all
+    when none), plus the predicate column, which is decoded for the filter
+    and output only if requested. An unknown name raises ``KeyError``; an
+    unknown op or a predicate on a non-integer column raises ``ValueError``."""
+    out = list(columns or schema.names)
+    decoded = out + [predicate[0]] if predicate is not None and predicate[0] not in out else out
+    idxs = [schema.index_of(c) for c in decoded]
+    if predicate is not None:
+        if predicate[1] not in _COMPARE:
+            raise ValueError(
+                f"unknown .col predicate op {predicate[1]!r}; expected one of {' '.join(_COMPARE)}"
+            )
+        if schema.columns[schema.index_of(predicate[0])].type is ColumnType.STRING:
+            raise ValueError(f".col predicate column {predicate[0]!r} is not an integer column")
+    return out, idxs
+
+
+def read_col_rows(
+    path: str,
+    columns: list[str] | None = None,
+    predicate: tuple[str, str, int] | None = None,
+    row_group: int | None = None,
+):
+    """Yield the rows of a .col file (or of its one row group ``row_group``)
+    as tuples — the scan loop of the reference (cae/src/execution.cpp:
+    48-229). Row groups the zone map excludes are never read; surviving
+    groups seek to and decode only the projected chunks, and the predicate
+    then filters rows exactly."""
+    schema, row_groups, _total = read_col_metadata(path)
+    out, idxs = projection(schema, columns, predicate)
+    if row_group is not None:
+        row_groups = [row_groups[row_group]]
+    skips = _skippable_row_groups(row_groups, schema, predicate)
+    if predicate is not None:
+        col, op, value = predicate
+        pi, cmp, keep = idxs.index(schema.index_of(col)), _COMPARE[op], len(out)
+    with open(path, "rb") as f:
+        for rg, skip in zip(row_groups, skips):
+            if skip:
+                continue
+            chunks = []
+            for ci in idxs:
+                ch = rg.chunks[ci]
+                f.seek(ch.file_offset)
+                chunks.append(_decode_chunk(f.read(ch.total_size), schema.columns[ci], ch))
+            rows = zip(*chunks)
+            if predicate is not None:
+                rows = (r[:keep] if pi >= keep else r for r in rows if cmp(r[pi], value))
+            yield from rows
+
+
 def read_col(
     spark: SparkSession,
     path: str,
     columns: list[str] | None = None,
     predicate: tuple[str, str, int] | None = None,
 ) -> DataFrame:
-    """Load a .col file into a DataFrame (with column projection — only
-    requested chunks are read and decoded, mirroring the reference scanner's
-    pruning, cae/src/execution.cpp:252-261).
+    """Load a .col file into a DataFrame through ``spark.read.format("col")``
+    (one input partition per row group, decoded in the Python workers by
+    ``read_col_rows``).
 
-    ``predicate=(col, op, value)`` (op in eq/ne/lt/le/gt/ge, int columns)
-    additionally applies the reference's zone-map skipping: row groups
-    whose page stats exclude the value are never read OR decoded, and the
-    surviving rows are filtered exactly."""
-    schema, row_groups, _total = read_col_metadata(path)
-    proj = columns or schema.names
-    if predicate is not None and predicate[0] not in proj:
-        proj = list(proj) + [predicate[0]]
-    idxs = [schema.index_of(c) for c in proj]
-    skips = _skippable_row_groups(row_groups, schema, predicate)
+    ``columns`` prunes the decoded chunks; ``predicate=(col, op, value)``
+    (op in eq/ne/lt/le/gt/ge, integer columns) skips row groups by zone map
+    and filters the surviving rows exactly. The footer, the metadata and
+    every name are checked here on the driver, so a corrupt footer raises
+    ``ColFormatError`` and an unknown column ``KeyError`` before Spark runs;
+    a corrupt page fails the Spark job with ``ColFormatError`` in its
+    message."""
+    from .col_datasource import register_col_datasource
 
-    data: dict[str, list] = {c: [] for c in proj}
-    with open(path, "rb") as f:
-        for rg, skip in zip(row_groups, skips):
-            if skip:
-                continue
-            for c, ci in zip(proj, idxs):
-                ch = rg.chunks[ci]
-                f.seek(ch.file_offset)
-                raw = f.read(ch.total_size)
-                data[c].extend(_decode_chunk(raw, schema.columns[ci], ch))
-
-    spark_schema = T.StructType(
-        [schema.columns[ci].to_spark_field(nullable=False) for ci in idxs]
-    )
-    rows = list(zip(*[data[c] for c in proj])) if proj else []
-    df = spark.createDataFrame(rows, spark_schema)
+    schema, _, _ = read_col_metadata(path)
+    projection(schema, columns, predicate)
+    register_col_datasource(spark)
+    reader = spark.read.format("col")
+    if columns:
+        reader = reader.option("columns", ",".join(columns))
     if predicate is not None:
-        col, op, value = predicate
-        c = F.col(col)
-        df = df.where(
-            {
-                "eq": c == value,
-                "ne": c != value,
-                "lt": c < value,
-                "le": c <= value,
-                "gt": c > value,
-                "ge": c >= value,
-            }[op]
-        )
-        if columns is not None and col not in columns:
-            df = df.drop(col)
-    return df
+        reader = reader.option("predicate", " ".join(map(str, predicate)))
+    return reader.load(path)
 
 
 def col_to_parquet(spark: SparkSession, col_path: str, parquet_path: str) -> None:

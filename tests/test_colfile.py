@@ -268,6 +268,13 @@ def test_zone_map_page_skipping(spark, tmp_path):
     got2 = colfile.read_col(spark, p, columns=["id"], predicate=("value", "ge", 985)).collect()
     assert sorted(r["id"] for r in got2) == [99]
     assert got2[0].asDict().keys() == {"id"}  # predicate column dropped again
+    # a bad op or name fails on the driver, before Spark runs
+    with pytest.raises(ValueError, match="eq ne lt le gt ge"):
+        colfile.read_col(spark, p, predicate=("value", "zz", 1))
+    with pytest.raises(KeyError, match="column not found"):
+        colfile.read_col(spark, p, predicate=("nope", "gt", 1))
+    with pytest.raises(KeyError, match="column not found"):
+        colfile.read_col(spark, p, columns=["id", "nope"])
 
 
 def test_col_datasource_partition_per_row_group(spark, tmp_path):
@@ -361,6 +368,10 @@ def test_col_datasource_error_contract(spark, tmp_path):
         spark.read.format("col").option("predicate", "value gt").load(path).collect()
     with pytest.raises(Exception):  # unknown column in predicate
         spark.read.format("col").option("predicate", "nope gt 1").load(path).collect()
+    with pytest.raises(Exception, match="eq ne lt le gt ge"):  # unknown op token
+        spark.read.format("col").option("predicate", "value zz 1").load(path).collect()
+    with pytest.raises(Exception, match="not an integer column"):
+        spark.read.format("col").option("predicate", "region eq 1").load(path).collect()
 
 
 def test_col_stream_source_matches_batch(spark, tmp_path):
@@ -405,6 +416,16 @@ def test_col_stream_source_matches_batch(spark, tmp_path):
         .collect()
     }
     assert got == exp
+
+    # the columns and predicate options act on the stream as on the batch read
+    for opt, val, n in (("predicate", "id lt 100", 100), ("columns", "value", 6_000)):
+        stream = spark.readStream.format("col").option(opt, val).load(str(d))
+        batch = spark.read.format("col").option(opt, val).load(str(d))
+        assert stream.columns == batch.columns
+        got_rows = S.run_to_memory(stream, output_mode="append").collect()
+        want_rows = batch.collect()
+        assert len(want_rows) == n
+        assert sorted(map(tuple, got_rows)) == sorted(map(tuple, want_rows))
 
 
 def test_col_stream_sink_roundtrip(spark, tmp_path):
